@@ -3,7 +3,7 @@
 Five dedup families, each a `queries()` entry with a DuckDB oracle:
 
 - exact         : hash-groupBy on a normalized key (one shuffle)
-- MinHash + LSH : shingle -> 8 minhashes -> 4 bands -> bucket self-join
+- MinHash + LSH : shingle -> 8 minhashes -> 4 bands -> bucket pairs
 - SimHash       : 32-bit sign-of-sums signature + band bucketing
 - n-gram Jaccard: shingle-set overlap for candidate pairs
 - embedding-cosine near-dup: see operators/similarity.py (shares machinery)
@@ -11,11 +11,14 @@ Five dedup families, each a `queries()` entry with a DuckDB oracle:
 Portability: every hash is md5-hex (see textprims.py). At 100 TB the shapes
 hold: shingle explosion is map-side; minhash/simhash aggregation is one
 groupBy per doc (combiner-friendly: MIN/SUM partial-aggregate map-side); the
-LSH self-join shuffles on (band, key) — exactly the bucket-join that makes
-near-dup detection tractable at scale (vs the O(n^2) naive pair join).
+LSH pairing shuffles once on (band, key) and pairs docs only inside a bucket
+(:func:`bucket_pairs`) — what makes near-dup detection tractable at scale
+(vs the O(n^2) naive pair join).
 """
 
 from __future__ import annotations
+
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,10 +119,10 @@ def shared_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cap_buckets(bands: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
     """Drop rows belonging to buckets with more than ``cap`` members.
 
-    The hot-bucket guard for every LSH family: one groupBy on the bucket key
-    (co-partitioned with the self-join that follows, so the marginal shuffle
-    is the aggregated bucket-size table only) + a semi-join-shaped inner join
-    back. Production dedup always caps bucket size — a single degenerate
+    The hot-bucket guard as a row FILTER, for pairs that come from a join
+    other than a bucket self-join (similarity's query-vs-corpus ANN): one
+    groupBy on the bucket key + an inner join back. Dedup pairs use
+    :func:`bucket_pairs`, which caps inside its own grouping. A degenerate
     bucket of b members contributes b^2 candidate pairs."""
     sizes = (
         bands.groupBy(*key_cols)
@@ -130,23 +133,68 @@ def cap_buckets(bands: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
     return bands.join(sizes, key_cols)
 
 
+def _buckets(rows: DataFrame, key_cols: list[str], members: list[str]) -> DataFrame:
+    """(key_cols..., m): one row per bucket, ``m`` its members as structs."""
+    return rows.groupBy(*key_cols).agg(F.collect_list(F.struct(*members)).alias("m"))
+
+
+def bucket_pairs(
+    rows: DataFrame, key_cols: list[str], members: list[str], cap: int,
+    keep=lambda a, b: F.lit(True),
+) -> DataFrame:
+    """(doc_a, doc_b, a, b) for each two docs of ``rows`` that share a bucket,
+    doc_a < doc_b, ``a``/``b`` their (doc_id, *members) structs, kept where
+    ``keep(a, b)`` — the bucket pairing of every dedup pair family.
+
+    ONE grouped pass: rows group by the bucket key into a member array; a
+    bucket over ``cap`` members is dropped whole (:func:`_hot_buckets`
+    lists exactly those); each member is exploded against its own bucket's
+    array and the pair test runs in that codegen stage (a ``filter()``
+    lambda over the array runs interpreted: simhash pairs took 5.6 s, not
+    2.2 s, at sf0.1 on 4 cores). Same pairs as :func:`cap_buckets` + a
+    self-join on the key, but ``rows`` is planned once, where Catalyst
+    planned it per reference (four times). Memory: an over-cap bucket's
+    members are gathered before the size test — LINEAR in its size; the
+    pair emission it guards against is QUADRATIC."""
+    return (
+        _buckets(rows, key_cols, ["doc_id", *members])
+        .filter(F.size("m") <= cap)
+        .select(F.explode("m").alias("a"), "m")
+        .select("a", F.explode("m").alias("b"))
+        .filter((F.col("a.doc_id") < F.col("b.doc_id")) & keep(F.col("a"), F.col("b")))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"), "a", "b")
+    )
+
+
+def _hot_buckets(rows: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
+    """(key_cols..., bucket_n) for the buckets :func:`bucket_pairs` drops."""
+    hot = _buckets(rows, key_cols, ["doc_id"]).filter(F.size("m") > cap)
+    return hot.select(*key_cols, F.size("m").cast("bigint").alias("bucket_n"))
+
+
+def _warn_if_capped(cap: int, pairs: str, report: str) -> None:
+    """Non-default cap: ``pairs`` may diverge from the uncapped DuckDB
+    oracles, so say so, naming the report of the dropped buckets."""
+    if cap != _LSH_MAX_BUCKET_DEFAULT:
+        warnings.warn(
+            f"{LSH_MAX_BUCKET}={cap} (non-default): {pairs} may diverge from "
+            f"the uncapped DuckDB oracles; see {report}()",
+            stacklevel=3,
+        )
+
+
 def hot_bucket_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(band, key, bucket_n) for buckets the cap excluded — 'no silent caps':
     callers can count/inspect exactly what candidate generation dropped."""
     cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
-    bands = lsh_bands(shared_sigs(spark, sf_dir))
-    return (
-        bands.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") > cap)
-    )
+    return _hot_buckets(lsh_bands(shared_sigs(spark, sf_dir)), ["band", "key"], cap)
 
 
 def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cached (doc_a, doc_b) LSH candidate pairs: the bucket self-join on
-    (band, key) — the only pair-generating shuffle in the dedup family.
-    Buckets over ``skinnerdb.lsh.maxBucket`` are excluded first (see
-    :func:`cap_buckets`; :func:`hot_bucket_report` shows what was dropped).
+    """Cached (doc_a, doc_b) LSH candidate pairs: docs sharing a (band, key)
+    bucket, paired in one grouped pass (:func:`bucket_pairs` — one shuffle
+    on the bucket key, no join). Buckets over ``skinnerdb.lsh.maxBucket``
+    are dropped whole (:func:`hot_bucket_report` shows which).
 
     Oracle-parity caveat: the DuckDB oracles for the LSH family
     (dedup_minhash_lsh / dedup_pipeline_decisions / dedup_ngram_jaccard)
@@ -155,29 +203,11 @@ def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate failure is traceable to the cap rather than a logic bug; inspect
     :func:`hot_bucket_report` to see exactly which buckets were dropped."""
     cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
-    if cap != _LSH_MAX_BUCKET_DEFAULT:
-        import warnings
-
-        warnings.warn(
-            f"{LSH_MAX_BUCKET}={cap} (non-default): LSH candidate pairs may "
-            "diverge from the uncapped DuckDB oracles; see hot_bucket_report()",
-            stacklevel=2,
-        )
+    _warn_if_capped(cap, "LSH candidate pairs", "hot_bucket_report")
 
     def build():
-        bands = cap_buckets(lsh_bands(shared_sigs(spark, sf_dir)), ["band", "key"], cap)
-        a = bands.alias("a")
-        b = bands.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-        )
+        bands = lsh_bands(shared_sigs(spark, sf_dir))
+        return bucket_pairs(bands, ["band", "key"], [], cap).select("doc_a", "doc_b").distinct()
     return _memo(spark, sf_dir, f"cand@{cap}", build)
 
 
@@ -283,7 +313,7 @@ def lsh_bands(sigs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     Rows per band derive from the *actual* signature length (size(sig)), so a
     longer signature from minhash_signatures(n_hashes=16) bands correctly.
     The posexplode here is |docs| * n_bands rows — the only fan-out in the
-    pipeline, and it feeds directly into the bucket self-join shuffle."""
+    pipeline, and it feeds directly into the bucket grouping shuffle."""
     bands_arr = F.expr(
         f"transform(sequence(0, {n_bands - 1}), b -> md5(cast(concat_ws('|', "
         f"slice(sig, b * (size(sig) div {n_bands}) + 1, size(sig) div {n_bands})) as binary)))"
@@ -317,8 +347,8 @@ _MINHASH_ORACLE = f"""
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates with estimated Jaccard.
 
-    shingle -> minhash -> band -> bucket self-join: the scale path. The
-    candidate join shuffles on (band, key) so only same-bucket docs ever meet;
+    shingle -> minhash -> band -> bucket pairs: the scale path. The
+    candidate build shuffles on (band, key) so only same-bucket docs meet;
     the final signature-compare join is |cand| * H rows. The signatures cross
     that join as int64 arrays (xxhash64 of each md5 position, projected
     map-side off the cached family frame — r11, the narrow-types recipe):
@@ -1008,10 +1038,10 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs at SimHash Hamming distance <= 3: the 32-bit signature
     splits into 4 bands of 8 bits, and by pigeonhole any pair within
     distance 3 agrees EXACTLY on at least one band — so candidates meet only
-    inside (band, band_key) buckets (one shuffle, same skeleton + cap
-    semantics as the minhash family) and the exact Hamming count runs
-    in-row on candidates only. This is the Google-crawl dedup formulation
-    (Manku et al., WWW'07) on the already-verified signature column.
+    inside (band, band_key) buckets (:func:`bucket_pairs`, same grouped
+    pass + cap semantics as the minhash family) and the exact Hamming test
+    runs on those pairs only, in the pairing's codegen stage. This is the
+    Google-crawl dedup formulation (Manku et al., WWW'07).
 
     The minhash family's hot-bucket cap applies here too
     (``skinnerdb.lsh.maxBucket``): a degenerate band value shared by b docs
@@ -1020,7 +1050,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirror assumes the cap is not hit at gate SF (largest bucket at sf0.01
     is 343 vs the 100k default)."""
     cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
-    # signatures ride the join as 32-bit INTEGERS, not 32-char bit-strings:
+    # signatures ride the bucket as 32-bit INTEGERS, not 32-char bit-strings:
     # bands become (sig >> (32-8b)) & 255 (identical grouping to the MSB-first
     # substring bands the oracle uses), candidate rows shrink ~6x on the
     # bucket shuffle, and the exact verify is bit_count(a XOR b) — one xor +
@@ -1039,24 +1069,16 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band", "band_key"),
     )
-    bands = cap_buckets(bands, ["band", "band_key"], cap)
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), F.col("sig_int").alias("sig_a"), "band", "band_key"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"), F.col("sig_int").alias("sig_b"), "band", "band_key"
-    )
+    pairs = bucket_pairs(bands, ["band", "band_key"], ["sig_int"], cap)
+    hamming = F.bit_count(F.col("a.sig_int").bitwiseXOR(F.col("b.sig_int"))).cast("bigint")
     # verify BEFORE cross-band dedup: the xor+popcount test is ~free per
-    # joined row while distinct() is a multi-million-row exchange+hash, and
-    # only ~7% of candidates survive Hamming<=3 on this corpus — filtering
-    # first shrinks the dedup input ~15x (measured 6.4M -> 0.9M rows at
-    # sf0.1). hamming is functionally determined by the pair, so the
-    # 3-column distinct equals a pair distinct.
-    hamming = F.expr("bit_count(sig_a ^ sig_b)").cast("bigint")
+    # pair while distinct() is a multi-million-row exchange+hash, and only
+    # ~7% of candidates survive Hamming<=3 on this corpus — filtering first
+    # shrinks the dedup input ~15x (measured 6.4M -> 0.9M rows at sf0.1).
+    # hamming is functionally determined by the pair, so the 3-column
+    # distinct equals a pair distinct.
     return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
+        pairs.select("doc_a", "doc_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= 3)
         .distinct()
     )
@@ -1137,17 +1159,12 @@ def _rarity_prefix(sh: DataFrame) -> DataFrame:
 def prefix_hot_bucket_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(s, bucket_n) for prefix-shingle buckets the cap excluded — the
     'no silent caps' twin of :func:`hot_bucket_report` for the exact
-    prefix-filter join. ``s`` is the shingle's xxhash64 (the prefix join
-    key since r11); recover the offending string by filtering
+    prefix-filter pairs. ``s`` is the shingle's xxhash64 (the prefix
+    bucket key since r11); recover the offending string by filtering
     ``shared_shingle_sets`` for docs whose transform(sh_set, xxhash64)
     contains it."""
     cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
-    prefix = _rarity_prefix(shared_shingle_sets(spark, sf_dir))
-    return (
-        prefix.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") > cap)
-    )
+    return _hot_buckets(_rarity_prefix(shared_shingle_sets(spark, sf_dir)), ["s"], cap)
 
 
 @register("dedup_prefix_filter", _PREFIX_ORACLE, tags=("dedup", "pipeline", "prefix"))
@@ -1161,15 +1178,17 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(t*|A|) (J >= t => i >= t(|A|+|B|-i) >= t|A|), so the globally
     FIRST shared shingle w cannot sit beyond either prefix — if it did,
     that doc's suffix from w on (< ceil(t*n) slots) would have to hold all
-    >= ceil(t*n) shared shingles. Hence every qualifying pair meets in the
-    prefix join. The >= 1/2 cut is the integer test 3*i >= n_a + n_b — no
+    >= ceil(t*n) shared shingles. Hence every qualifying pair meets in a
+    prefix bucket. The >= 1/2 cut is the integer test 3*i >= n_a + n_b — no
     float in the decision; jaccard is emitted as one IEEE division.
 
-    Scale shape: rarity-first prefixes make bucket sizes ~inverse to
-    selectivity (the rarest shingles have the smallest buckets — opposite
-    of banded LSH's uniform buckets), the prefix join touches ~half of each
-    doc's set, and the exact intersection runs in-row (array_intersect) on
-    candidates only. This is the exact-threshold production alternative to
+    Plan shape: the rarity prefix is computed ONCE and grouped by shingle
+    (:func:`bucket_pairs`: one shuffle on ``s``, no self-join); pairs meet
+    only inside a prefix bucket and the exact intersection runs in-row
+    (array_intersect) on candidates only. Rarity-first prefixes make bucket
+    sizes ~inverse to selectivity (the rarest shingles have the smallest
+    buckets — opposite of banded LSH's uniform buckets), and the prefix
+    touches ~half of each doc's set. This is the exact-threshold production alternative to
     minhash when recall must be 1.0; tested pair-for-pair against the
     all-pairs brute force.
 
@@ -1184,8 +1203,8 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus remains quadratic BY CONSTRUCTION (>570 s at sf10, watchdogged)
     — that corpus misrepresents the workload; per-shingle density there is
     ~n/1024 while real corpora put most shingles in O(1) docs. Two guards:
-    - PPJoin POSITIONAL filter (exactness-preserving, in the join
-      predicate): a pair first meeting at prefix ranks (rn_a, rn_b) can
+    - PPJoin POSITIONAL filter (exactness-preserving, in the pair
+      filter): a pair first meeting at prefix ranks (rn_a, rn_b) can
       overlap at most 1 + min(n_a - rn_a, n_b - rn_b); requiring
       3*(that) >= n_a + n_b prunes exactly the late-prefix meetings that
       common shingles produce. Every J >= t pair still meets at its FIRST
@@ -1208,11 +1227,11 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the equal-size special case) are implied, so adding them is a no-op on
     output. PPJoin+'s suffix filter goes further only by probing the two
     docs' actual suffix CONTENT (divide-and-conquer Hamming bound) — a
-    per-pair computation that in this join shape can only run at the
+    per-pair computation that in this pairing shape can only run at the
     verify stage, where the cost is already one vectorized int64
     `array_intersect` per deduped pair; the stage it would save is not the
-    bottleneck. The quadratic term is the bucket-join ENUMERATION itself
-    (Σ bucket² inside codegen), which no join-predicate or verify-stage
+    bottleneck. The quadratic term is the bucket-pair ENUMERATION itself
+    (Σ bucket² inside codegen), which no pair-filter or verify-stage
     filter reduces — only bucket size does, which is why the measured
     scale contract above is stated against vocabulary realism (bucket
     sparsity) plus the hot-bucket cap rather than more per-pair filters."""
@@ -1223,52 +1242,33 @@ def shared_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached exact prefix-filter pairs — the family build for the
     exact-threshold side of the dedup tier. Two consumers read it
     (dedup_prefix_filter itself and dedup_lsh_recall_report, whose truth
-    side would otherwise re-execute the whole prefix join per reference —
-    measured at 2x the join cost inside one report action before this memo
-    existed). Keyed by the bucket cap like shared_verified_pairs: a
-    mid-session cap change must rebuild the pairs, not serve ones computed
-    under the old cap."""
+    side would otherwise re-execute the whole prefix pairing per reference,
+    measured at 2x its cost inside one report action). Keyed by the bucket
+    cap like shared_verified_pairs: a mid-session cap change must rebuild
+    the pairs, not serve ones computed under the old cap."""
     cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
     return _memo(
         spark, sf_dir, f"prefix_pairs@{cap}",
-        lambda: _prefix_pairs_impl(spark, sf_dir),
+        lambda: _prefix_pairs_impl(spark, sf_dir, cap),
     )
 
 
-def _prefix_pairs_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
-    if cap != _LSH_MAX_BUCKET_DEFAULT:
-        import warnings
-
-        warnings.warn(
-            f"{LSH_MAX_BUCKET}={cap} (non-default): prefix-filter pairs may "
-            "diverge from the uncapped DuckDB oracle (recall guarantee "
-            "waived past the cap); see prefix_hot_bucket_report()",
-            stacklevel=2,
-        )
-    sh = shared_shingle_sets(spark, sf_dir)
-    prefix = cap_buckets(_rarity_prefix(sh), ["s"], cap)
-    a, b = prefix.alias("a"), prefix.alias("b")
-    # Join-predicate pruning (output-identical, see docstring):
+def _prefix_pairs_impl(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:
+    _warn_if_capped(
+        cap, "prefix-filter pairs (recall guarantee waived past the cap)",
+        "prefix_hot_bucket_report",
+    )
+    # Pair-test pruning (output-identical, see docstring):
     # - LENGTH filter: J >= 1/2 forces set sizes within 2x of each other
     #   (24% fewer pairs measured at sf0.1);
     # - POSITIONAL filter: overlap upper bound from the meeting ranks
     #   (another ~3x fewer candidate rows at sf1's density).
-    cand = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (2 * F.col("b.n") >= F.col("a.n"))
-            & (2 * F.col("a.n") >= F.col("b.n"))
-            & (
-                3 * (1 + F.least(F.col("a.n") - F.col("a.rn"), F.col("b.n") - F.col("b.rn")))
-                >= F.col("a.n") + F.col("b.n")
-            ),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(
+        _rarity_prefix(shared_shingle_sets(spark, sf_dir)), ["s"], ["n", "rn"], cap,
+        lambda a, b: (2 * b.n >= a.n)
+        & (2 * a.n >= b.n)
+        & (3 * (1 + F.least(a.n - a.rn, b.n - b.rn)) >= a.n + b.n),
+    ).select("doc_a", "doc_b").distinct()
     shh = shared_shingle_hashes(spark, sf_dir)
     sa = shh.select(
         F.col("doc_id").alias("doc_a"), F.col("sh_h").alias("set_a"), F.col("n").alias("n_a")

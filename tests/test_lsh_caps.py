@@ -16,10 +16,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from skinnerdb_spark.operators.dedup import (
+    _LSH_MAX_BUCKET_DEFAULT,
     LSH_MAX_BUCKET,
+    _rarity_prefix,
     cap_buckets,
     hot_bucket_report,
+    lsh_bands,
     lsh_candidates,
+    prefix_hot_bucket_report,
+    shared_prefix_pairs,
+    shared_shingle_hashes,
+    shared_shingle_sets,
+    shared_sigs,
 )
 from skinnerdb_spark.operators.similarity import (
     MP_BITS,
@@ -35,6 +43,104 @@ def test_cap_buckets_drops_only_over_cap(spark):
     kept = cap_buckets(df, ["key"], cap=2).groupBy("key").count().collect()
     sizes = {r["key"]: r["count"] for r in kept}
     assert sizes == {"b2": 2, "b3": 1}, "the 5-member bucket must be dropped whole"
+
+
+def _old_lsh_candidates(spark, sf_dir, cap):
+    """Reference: the cap join + bucket self-join shape bucket_pairs replaced."""
+    bands = cap_buckets(lsh_bands(shared_sigs(spark, sf_dir)), ["band", "key"], cap)
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def _old_prefix_pairs(spark, sf_dir, cap):
+    """Reference: the prefix-filter pairs via cap join + self-join on ``s``."""
+    prefix = cap_buckets(_rarity_prefix(shared_shingle_sets(spark, sf_dir)), ["s"], cap)
+    a, b = prefix.alias("a"), prefix.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.s") == F.col("b.s"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (2 * F.col("b.n") >= F.col("a.n"))
+            & (2 * F.col("a.n") >= F.col("b.n"))
+            & (
+                3 * (1 + F.least(F.col("a.n") - F.col("a.rn"), F.col("b.n") - F.col("b.rn")))
+                >= F.col("a.n") + F.col("b.n")
+            ),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+    shh = shared_shingle_hashes(spark, sf_dir)
+    sa = shh.select(
+        F.col("doc_id").alias("doc_a"), F.col("sh_h").alias("set_a"), F.col("n").alias("n_a")
+    )
+    sb = shh.select(
+        F.col("doc_id").alias("doc_b"), F.col("sh_h").alias("set_b"), F.col("n").alias("n_b")
+    )
+    inter = F.size(F.array_intersect("set_a", "set_b")).cast("bigint")
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select("doc_a", "doc_b", inter.alias("inter_n"), "n_a", "n_b")
+        .filter(3 * F.col("inter_n") >= F.col("n_a") + F.col("n_b"))
+        .select(
+            "doc_a", "doc_b", "inter_n", "n_a", "n_b",
+            (
+                F.col("inter_n").cast("double")
+                / (F.col("n_a") + F.col("n_b") - F.col("inter_n"))
+            ).alias("jaccard"),
+        )
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("cap", [_LSH_MAX_BUCKET_DEFAULT, 1, 2])
+def test_grouped_pairs_match_self_join_reference(spark, sf_dir, cap):
+    """The grouped bucket pass emits exactly the old self-join's pairs at
+    the default cap and at tiny caps, and each hot-bucket report lists
+    exactly the buckets the cap dropped."""
+    prev = spark.conf.get(LSH_MAX_BUCKET, None)
+    spark.conf.set(LSH_MAX_BUCKET, str(cap))
+    try:
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            lsh = _rows(lsh_candidates(spark, sf_dir))
+            prefix = _rows(shared_prefix_pairs(spark, sf_dir))
+        warned = any(LSH_MAX_BUCKET in str(x.message) for x in w)
+        assert warned == (cap != _LSH_MAX_BUCKET_DEFAULT), "warn on a non-default cap only"
+        assert lsh == _rows(_old_lsh_candidates(spark, sf_dir, cap))
+        assert prefix == _rows(_old_prefix_pairs(spark, sf_dir, cap))
+
+        def over_cap(rows, key_cols):
+            sizes = rows.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("bucket_n"))
+            return _rows(sizes.filter(F.col("bucket_n") > cap))
+
+        hot_lsh = _rows(hot_bucket_report(spark, sf_dir))
+        assert hot_lsh == over_cap(lsh_bands(shared_sigs(spark, sf_dir)), ["band", "key"])
+        hot_prefix = _rows(prefix_hot_bucket_report(spark, sf_dir))
+        assert hot_prefix == over_cap(_rarity_prefix(shared_shingle_sets(spark, sf_dir)), ["s"])
+    finally:
+        if prev is None:
+            spark.conf.unset(LSH_MAX_BUCKET)
+        else:
+            spark.conf.set(LSH_MAX_BUCKET, prev)
+    if cap == 1:
+        assert lsh == [] and prefix == [], "a pair needs a bucket of size >= 2"
+    if cap == 2:
+        assert lsh and hot_lsh and hot_prefix, "cap 2 must both keep and drop buckets here"
 
 
 def test_dedup_lsh_cap_bounds_candidates_and_reports(spark, sf_dir):

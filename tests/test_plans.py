@@ -569,3 +569,30 @@ def test_r9_session2b_entries_plan_shapes(spark, sf_dir):
     plan = executed("ev_markov_stationary")
     assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan, plan[:600]
     assert "FileScan parquet" not in plan
+
+
+def test_dedup_pair_builds_group_buckets_instead_of_self_joining(spark, sf_dir):
+    """The dedup pair families pair bucket members in one grouped pass: the
+    rarity prefix is planned once (the cap join + self-join planned it four
+    times) and LSH candidates need no join on the (band, key) bucket."""
+    import re
+
+    from skinnerdb_spark.operators.dedup import lsh_candidates, shared_prefix_pairs
+
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    # an executed AQE plan prints a node once per plan section it sits in;
+    # separately planned copies differ in their attribute ids
+    plan = executed(shared_prefix_pairs(spark, sf_dir))
+    windows = {
+        line.strip(" :+-|") for line in plan.splitlines() if "Window [row_number" in line
+    }
+    assert len(windows) == 1, windows
+
+    plan = executed(lsh_candidates(spark, sf_dir))
+    bucket_joins = [
+        line for line in plan.splitlines()
+        if "Join" in line and re.search(r"band#\d+, key#\d+", line)
+    ]
+    assert not bucket_joins, bucket_joins

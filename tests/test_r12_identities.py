@@ -148,6 +148,34 @@ def test_bloom_per_key_fold_matches_row_level_reference(spark, sf_dir):
     _assert_frames_equal(entry, reference)
 
 
+def test_bloom_empty_probe_counts_zero_like_oracle(spark, sf_dir, tmp_path):
+    """On an empty probe selection every count is 0, as the oracle's
+    COUNT(*) gives, never the NULL a bare SUM over no rows returns."""
+    import shutil
+
+    import duckdb
+
+    from skinnerdb_spark.catalog import table_path
+
+    shutil.copy(table_path(sf_dir, "orders"), table_path(str(tmp_path), "orders"))
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * FROM read_parquet('{table_path(sf_dir, 'lineitem')}') "
+        "WHERE l_shipdate < DATE '1995-07-01' OR l_shipdate >= DATE '1996-01-01') "
+        f"TO '{table_path(str(tmp_path), 'lineitem')}' (FORMAT PARQUET)"
+    )
+    for t in ("orders", "lineitem"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(str(tmp_path), t)}')"
+        )
+    spec = all_specs()["approx_bloom_semijoin"]
+    oracle = con.execute(spec.oracle).df()
+    con.close()
+    row = spec.spark(spark, str(tmp_path)).collect()[0].asDict()
+    for c in ("n_probe", "n_pass", "n_true_keys", "n_rows_probe", "n_rows_pass", "n_rows_true"):
+        assert row[c] == 0 == oracle[c][0], (c, row[c], oracle[c][0])
+
+
 def test_asof_first_shipment_matches_general_asof_join(spark, sf_dir):
     """r12: the unique-left-key rewrite must equal the general forward
     as-of join formulation (union + descending carry) row-for-row."""
@@ -178,16 +206,14 @@ def test_asof_first_shipment_matches_general_asof_join(spark, sf_dir):
 
 
 def test_ned_keyed_build_matches_transform_lambda_reference(spark, sf_dir):
-    """r12: the top-level-hash deletion-key build must emit exactly the
-    (name, key) SET the old transform()-lambda + array_union shape did."""
-    from skinnerdb_spark.operators.dedup import _memo
-
+    """r12: the top-level-hash deletion-key build must give exactly the
+    pairs the old transform()-lambda + array_union key shape did."""
     names = (
         read_table(spark, sf_dir, "customer")
         .select(F.col("c_name").alias("name"))
         .distinct()
     )
-    reference = names.select(
+    keyed = names.select(
         "name",
         F.explode(
             F.expr(
@@ -198,15 +224,17 @@ def test_ned_keyed_build_matches_transform_lambda_reference(spark, sf_dir):
             )
         ).alias("k"),
     )
-    keyed = _memo(spark, sf_dir, "ned_keyed", lambda: None)  # must already exist
-    assert keyed is not None or True  # memo presence is not the contract
-    # build via the entry's own path: run the entry once so the memo exists
-    all_specs()["name_edit_distance_pairs"].spark(spark, sf_dir).count()
-    from skinnerdb_spark.operators import dedup as D
-
-    key = (spark.sparkContext.applicationId, sf_dir, "ned_keyed")
-    new_keyed = D._SHARED[key]
-    _assert_frames_equal(new_keyed, reference)
+    a = keyed.select(F.col("name").alias("name_a"), "k")
+    b = keyed.select(F.col("name").alias("name_b"), "k")
+    reference = (
+        a.join(b, ["k"])
+        .filter(F.col("name_a") < F.col("name_b"))
+        .filter(F.levenshtein("name_a", "name_b") == 1)
+        .select("name_a", "name_b")
+        .distinct()
+    )
+    entry = all_specs()["name_edit_distance_pairs"].spark(spark, sf_dir)
+    _assert_frames_equal(entry, reference)
 
 
 def test_pmi_family_derivation_matches_inline_counts(spark, sf_dir):

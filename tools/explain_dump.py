@@ -5,6 +5,10 @@ Usage:
     EXPLAIN_SUFFIX=after EXPLAIN_OUT=plans/r11 python tools/explain_dump.py \
         li_interval_overlap orders_percentile_disc ...
 
+A name with a dot, ``<module>.<function>``, dumps a session-shared family
+build instead of a registry entry: ``dedup.lsh_candidates`` calls
+``skinnerdb_spark.operators.dedup.lsh_candidates(spark, sf_dir)``.
+
 Run from a checkout of the commit whose plans you want (a worktree of the
 previous round's close commit for the *_before.txt files, HEAD for *_after).
 The formatted plan is the optimization-round evidence artifact: Exchange
@@ -15,6 +19,7 @@ any Python-boundary nodes are all visible in it.
 from __future__ import annotations
 
 import contextlib
+import importlib
 import io
 import os
 import sys
@@ -33,10 +38,15 @@ def main() -> None:
     spark = get_spark(app_name="explain-dump")
     specs = all_specs()
     for name in names:
-        if name not in specs:
+        if "." in name:
+            module, fn = name.split(".", 1)
+            build = getattr(importlib.import_module(f"skinnerdb_spark.operators.{module}"), fn)
+        elif name in specs:
+            build = specs[name].spark
+        else:
             print(f"SKIP {name}: not in registry", file=sys.stderr)
             continue
-        df = specs[name].spark(spark, sf_dir)
+        df = build(spark, sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
