@@ -50,7 +50,6 @@ explain <sql>             show the physical plan
 explain adaptive <sql>    show bandit episodes + chosen join order
 explain adaptive dot [every N] <sql>  graphviz DOT of the explored order tree (every N: snapshot files)
 adaptive on|off           toggle adaptive join ordering for SQL input
-adaptive rule [off]       inject learned orders into Catalyst (plain SQL)
 <sql>                     execute SQL and print the result"""
 
 
@@ -199,26 +198,9 @@ class Console:
             return self.engine.explain(rest)
         if cmd == "adaptive":
             arg = rest.strip().lower()
-            if arg in ("rule", "rule on", "rule off"):
-                # Catalyst-side injection: learned orders apply to PLAIN SQL
-                # (no bandit wrapping needed) — SURVEY §4.3 option (c)
-                from skinnerdb_spark.plans.catalyst_rule import (
-                    install_learned_order_rule,
-                    uninstall_learned_order_rule,
-                )
-
-                if arg.endswith("off"):
-                    uninstall_learned_order_rule(self.engine.spark)
-                    return "catalyst learned-order rule off"
-                ok = install_learned_order_rule(self.engine.spark)
-                return (
-                    "catalyst learned-order rule on"
-                    if ok
-                    else "rule jar not on driver classpath (session built "
-                    "without skinnerdb_spark.session.get_spark) — falling "
-                    "back to `adaptive on`"
-                )
-            self.adaptive = arg != "off"
+            if arg not in ("on", "off"):
+                return "usage: adaptive on|off"
+            self.adaptive = arg == "on"
             return f"adaptive join ordering {'on' if self.adaptive else 'off'}"
         return self._sql(line)
 

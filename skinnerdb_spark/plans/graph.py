@@ -82,19 +82,6 @@ _PASSTHROUGH = {
 _ORDER_CACHE: dict[tuple, tuple[str, ...]] = {}
 _ORDER_CACHE_CAP = 4096
 
-#: bumped on every mutation of _ORDER_CACHE (put or bulk load). Consumers
-#: that memoize "this plan shape had no learned order" (the Catalyst rule's
-#: no-op memo, plans/catalyst_rule.py) compare against this to invalidate
-#: their memo when new orders are learned — otherwise a query shape first
-#: seen before its order was learned would never be reordered for the rest
-#: of the session (ADVICE r7).
-_ORDER_CACHE_VERSION = 0
-
-
-def order_cache_version() -> int:
-    return _ORDER_CACHE_VERSION
-
-
 #: process-lifetime observability for the adaptive tier (bench.py emits
 #: these in its JSON so episode spend is visible per run): episodes =
 #: sampled exploration executions actually run; exploit_hits = duels
@@ -107,40 +94,13 @@ def adaptive_counters() -> dict[str, int]:
     return dict(_COUNTERS)
 
 
-def _exploit_rows_threshold() -> int:
-    """Estimated fact-row count at or above which a previously-duelled
-    transferred order is exploited WITHOUT a fresh duel (0 disables).
-
-    Default 16M estimated rows: well above every bench/test warehouse
-    (sf0.1 lineitem ~600k, sf1 ~6M) so local learning behavior is
-    unchanged, and below the sf10/100-TB regime where exploration episodes
-    were measured above-linear (~4.3x at the sf1->sf10 step on deep
-    shapes, VERDICT r7 item 3)."""
-    try:
-        return int(os.environ.get("SKINNER_TRANSFER_EXPLOIT_ROWS", "16000000"))
-    except ValueError:
-        return 16_000_000
-
-#: secondary index for ORDER-INSENSITIVE shape lookup (ADVICE r6 /
-#: VERDICT r6 item 6): canonical (sorted names, scopes, edges) -> the
-#: primary _ORDER_CACHE key. The Catalyst rule's unordered shape lookup
-#: runs inside every optimizer invocation of an eligible query — an O(cache)
-#: scan there puts up to 4096 tuple comparisons in the optimizer hot path;
-#: this dict makes it O(1). Values are primary KEYS (not orders), so a key
-#: popped from _ORDER_CACHE (cap eviction, test isolation) degrades to a
-#: clean miss instead of a stale hit.
-_SHAPE_INDEX: dict[tuple, tuple] = {}
-
-
-def _canon_shape(key: tuple) -> tuple:
-    return (tuple(sorted(key[0])), key[1], key[2])
-
-
-def _index_shape(key: tuple) -> None:
-    # shape keys are (names, scopes, edges); exact signatures add a 4th
-    # element and transfer keys lead with the "xfer" marker
-    if len(key) == 3 and key[0] != "xfer":
-        _SHAPE_INDEX[_canon_shape(key)] = key
+#: estimated fact-row count at or above which a previously-duelled
+#: transferred order is exploited WITHOUT a fresh duel. 16M rows is well
+#: above every bench/test warehouse (sf0.1 lineitem ~600k, sf1 ~6M), so
+#: local learning behavior is unchanged, and below the sf10/100-TB regime
+#: where exploration episodes were measured above-linear (~4.3x at the
+#: sf1->sf10 step on deep shapes, VERDICT r7 item 3).
+_TRANSFER_EXPLOIT_ROWS = 16_000_000
 
 #: learned orders also persist across sessions (spark-warehouse/
 #: joinorder_cache.json, same durability upgrade as the IVF index vs the
@@ -158,15 +118,6 @@ _persist_loaded = False
 
 def _persist_enabled() -> bool:
     return os.environ.get("SKINNER_ORDER_CACHE_PERSIST", "1") != "0"
-
-
-def _transfer_enabled() -> bool:
-    """Cross-warehouse order transfer (SKINNER_ORDER_TRANSFER=0 disables):
-    a new warehouse with the same query shape starts from the order learned
-    elsewhere instead of paying cold episodes. Correctness is unaffected
-    either way — the order only shapes the plan; AQE still picks physical
-    strategies per stage from THIS warehouse's runtime sizes."""
-    return os.environ.get("SKINNER_ORDER_TRANSFER", "1") != "0"
 
 
 def _tuplify(x):
@@ -193,7 +144,6 @@ def load_order_cache(path: str | None = None) -> int:
         key = _tuplify(k)
         if key not in _ORDER_CACHE:
             _ORDER_CACHE[key] = tuple(v)
-            _index_shape(key)
             n += 1
         # backfill the scope-free transfer tier from persisted SHAPE keys
         # (files written before the tier existed have none): shape keys are
@@ -204,8 +154,6 @@ def load_order_cache(path: str | None = None) -> int:
             xk = ("xfer", key[0], key[2])
             if xk not in _ORDER_CACHE and len(_ORDER_CACHE) < _ORDER_CACHE_CAP:
                 _ORDER_CACHE[xk] = tuple(v)
-    global _ORDER_CACHE_VERSION
-    _ORDER_CACHE_VERSION += 1
     return n
 
 
@@ -235,9 +183,6 @@ def _cache_put(key: tuple, order: tuple[str, ...]) -> None:
     if key not in _ORDER_CACHE and len(_ORDER_CACHE) >= _ORDER_CACHE_CAP:
         _ORDER_CACHE.pop(next(iter(_ORDER_CACHE)))
     _ORDER_CACHE[key] = order
-    _index_shape(key)
-    global _ORDER_CACHE_VERSION
-    _ORDER_CACHE_VERSION += 1
     if _persist_enabled():
         try:
             save_order_cache()
@@ -249,25 +194,31 @@ class ExtractionError(ValueError):
     """Query shape not eligible for adaptive reordering (caller falls back)."""
 
 
-#: per-JVM cache of resolved JavaClass handles, keyed by id(gateway jvm
-#: view). Every dotted component of a `spark._jvm.a.b.c.D` chain is its own
-#: py4j reflection ROUND TRIP (~0.3 ms), and extraction resolves the same
-#: four classes on every query — ~40 ms/query of pure class lookup at the
-#: bench's 172-query corpus (r12, measured by cProfile: 220 JVMView
-#: __getattr__ calls per 10 extractions). Keyed on id() of the JVMView:
-#: a new session builds a new gateway, so stale handles can never be
-#: served to a different JVM.
-_JVM_CLASSES: dict[tuple[int, str], Any] = {}
+#: resolved JavaClass handles of ONE gateway JVM view. Every dotted
+#: component of a `spark._jvm.a.b.c.D` chain is its own py4j reflection ROUND
+#: TRIP (~0.3 ms), and extraction resolves the same four classes on every
+#: query — ~40 ms/query of pure class lookup at the bench's 172-query corpus
+#: (r12, measured by cProfile: 220 JVMView __getattr__ calls per 10
+#: extractions). The cache holds the view it was filled from and is reset
+#: whenever `spark._jvm` is a different object: a new session builds a new
+#: gateway, so stale handles can never be served to a different JVM. The
+#: view itself is held, not its id(): CPython may give a freed view's id to
+#: the next view allocated.
+_JVM_CLASSES: dict[str, Any] = {}
+_JVM_VIEW: Any = None
 
 
 def _jcls(spark: SparkSession, path: str) -> Any:
-    key = (id(spark._jvm), path)
-    cls = _JVM_CLASSES.get(key)
+    global _JVM_VIEW
+    if spark._jvm is not _JVM_VIEW:
+        _JVM_CLASSES.clear()
+        _JVM_VIEW = spark._jvm
+    cls = _JVM_CLASSES.get(path)
     if cls is None:
         cls = spark._jvm
         for part in path.split("."):
             cls = getattr(cls, part)
-        _JVM_CLASSES[key] = cls
+        _JVM_CLASSES[path] = cls
     return cls
 
 
@@ -791,55 +742,40 @@ def adaptive_reorder(
             # Spark-first trade — per-order *physical* strategy still adapts
             # at runtime via AQE, so a selectivity flip costs little)
             cached = _cache_get(graph.shape_sig)
-        if cached is None and reuse_shape and _transfer_enabled():
+        if cached is None and reuse_shape:
             # cross-warehouse transfer: same shape learned on ANOTHER
             # warehouse (scope-free key). A warm start, never authoritative:
-            # by default the transferred order enters the episode duel below
-            # as the INCUMBENT arm and must win on THIS warehouse's sampled
-            # rewards before it executes (an order learned at 20 MB ran 40x
-            # behind greedy at the 100x-cardinality JOB replay — blind trust
-            # does not survive a scale jump). SKINNER_ORDER_TRANSFER=trust
-            # restores the r6 zero-episode behavior for same-machine,
-            # same-scale warehouse clones; the validated winner is written
-            # under THIS scope's signatures either way.
+            # the transferred order enters the episode duel below as the
+            # INCUMBENT arm and must win on THIS warehouse's sampled rewards
+            # before it executes (an order learned at 20 MB ran 40x behind
+            # greedy at the 100x-cardinality JOB replay — blind trust does
+            # not survive a scale jump); the validated winner is written
+            # under THIS scope's signatures.
             transferred = _cache_get(graph.transfer_sig)
             if transferred is not None and is_connected_order(
                 transferred, graph.names, graph.edges
             ):
-                reason = None
-                if os.environ.get("SKINNER_ORDER_TRANSFER") == "trust":
-                    reason = "cached-transfer"
-                else:
-                    # exploit-only fast path at scale (VERDICT r7 item 3):
-                    # every transfer-cache entry was written as a DUEL
-                    # WINNER (only _cache_put after the episode loop or a
-                    # validated run writes transfer_sig), so above the
-                    # size threshold re-exploring pays full sampled
-                    # executions at big-SF cost for a bounded, already-
-                    # duelled gain — the measured ~4.3x above-linear step
-                    # on 15/17-way shapes at sf10. Below the threshold the
-                    # duel still runs (cheap, keeps learning); on a cache
-                    # MISS the duel always runs. SKINNER_TRANSFER_EXPLOIT
-                    # _ROWS=0 disables the fast path entirely.
-                    thr = _exploit_rows_threshold()
-                    if thr > 0:
-                        # actual ROW estimate (footer/CBO-backed, ADVICE
-                        # r8): bytes//100 overshot wide-row tables 10-100x
-                        # and froze learning far below the intended regime
-                        est = graph.est_rows(graph.fact)
-                        if est >= thr:
-                            reason = "transfer-exploit"
-                            _COUNTERS["exploit_hits"] += 1
-                if reason is not None:
+                # exploit-only fast path at scale (VERDICT r7 item 3): every
+                # transfer-cache entry was written as a DUEL WINNER (only
+                # _cache_put after the episode loop writes transfer_sig), so
+                # above the size threshold re-exploring pays full sampled
+                # executions at big-SF cost for a bounded, already-duelled
+                # gain — the measured ~4.3x above-linear step on 15/17-way
+                # shapes at sf10. Below the threshold the duel still runs
+                # (cheap, keeps learning); on a cache MISS it always runs.
+                # The row estimate is footer/CBO-backed (ADVICE r8):
+                # bytes//100 overshot wide-row tables 10-100x and froze
+                # learning far below the intended regime.
+                if graph.est_rows(graph.fact) >= _TRANSFER_EXPLOIT_ROWS:
+                    _COUNTERS["exploit_hits"] += 1
                     # deliberately NOT written under this scope's signature:
                     # the signature tier means "duel-validated at this
-                    # scope", and both trust and exploit are warm starts,
-                    # not authority — a later run below the threshold (or
-                    # with the fast path disabled) still duels and only its
-                    # winner becomes authoritative here
+                    # scope", and an exploit is a warm start, not authority
+                    # — a later run below the threshold still duels and
+                    # only its winner becomes authoritative here
                     chain = build_graph_chain(graph, transferred)
                     res = AdaptiveJoinResult(finish(graph, chain), transferred)
-                    res.reason = reason  # type: ignore[attr-defined]
+                    res.reason = "transfer-exploit"  # type: ignore[attr-defined]
                     return res
     # validity — not membership in the first max_orders DFS candidates —
     # gates a cache hit: a winner that entered via the greedy seeds (the

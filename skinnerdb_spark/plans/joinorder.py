@@ -1,4 +1,5 @@
-"""Adaptive join ordering — the reference's headline feature, Spark-first.
+"""Adaptive join ordering primitives — the reference's headline feature,
+Spark-first.
 
 SkinnerDB picks join orders at run time with UCT Monte-Carlo tree search over
 budgeted episodes, no cost model (src/joining/uct/UctNode.java:208-282,
@@ -9,19 +10,22 @@ mid-flight, so we reproduce the *spirit* — no prior cost model, learn from
 execution — at the granularity Spark supports:
 
 1. candidate space: left-deep, connected join orders (same cartesian-avoid
-   rule as the reference);
-2. observation: cheap sampled-execution cardinality measurements per prefix
-   (sample the fact side, count the join output — the analogue of a budgeted
-   episode);
-3. policy: UCB1 bandit over candidate orders, rewards = negative normalized
-   cost of the sampled episode; repeated across episodes like the reference's
-   epsilon-greedy/UCB1 policies (src/config/JoinConfig.java:28-34);
+   rule as the reference) plus selectivity-greedy seeds;
+2. observation: budgeted sampled executions of a candidate's join chain (the
+   analogue of a budgeted episode), with partial-join reuse across episodes;
+3. policy: UCB1 bandit over candidate orders, rewards = negative log elapsed
+   time of the sampled episode (the reference's epsilon-greedy/UCB1 policies,
+   src/config/JoinConfig.java:28-34);
 4. execution: winning order emitted as a plain DataFrame join chain, which
    Catalyst/AQE then executes (broadcast/shuffle selection stays adaptive at
    stage granularity).
 
-Default engine path remains pure Catalyst; this module is opt-in and must
-always produce identical results, only (maybe) faster plans.
+This module holds the primitives only. The one episode loop and the one
+chain builder live in plans/graph.py (``adaptive_reorder`` learns an order,
+``build_graph_chain`` + ``finish`` apply it), which extracts the join graph
+from any analyzed plan. The default engine path remains pure Catalyst;
+adaptivity is opt-in and must always produce identical results, only (maybe)
+faster plans.
 """
 
 from __future__ import annotations
@@ -31,7 +35,6 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 @dataclass(frozen=True)
@@ -222,53 +225,6 @@ class PrefixProgress:
         self._frames.clear()
 
 
-def build_join_chain(
-    dfs: dict[str, DataFrame],
-    order: tuple[str, ...],
-    edges: list[JoinEdge],
-    progress: PrefixProgress | None = None,
-) -> DataFrame:
-    """Materialize a left-deep join order as a DataFrame chain; every edge
-    whose both sides are bound attaches at the earliest position (the
-    reference's predicate placement, LeftDeepPlan.java:54-124 — Catalyst would
-    do the same, we just keep the order pinned). With ``progress`` set
-    (exploration episodes only), each partial join is persisted and reused
-    across episodes — see :class:`PrefixProgress`."""
-    acc = dfs[order[0]]
-    bound = {order[0]}
-    used: set[int] = set()
-    for t in order[1:]:
-        hit = progress.get(frozenset(bound | {t})) if progress is not None else None
-        if hit is not None:
-            acc = hit
-            bound.add(t)
-            # edges inside the cached prefix are already applied there
-            for i, e in enumerate(edges):
-                if e.left_table in bound and e.right_table in bound:
-                    used.add(i)
-            continue
-        conds = []
-        for i, e in enumerate(edges):
-            if i in used or not e.touches(t):
-                continue
-            if e.other(t) in bound:
-                lc = e.left_col if e.left_table == t else e.right_col
-                oc = e.right_col if e.left_table == t else e.left_col
-                conds.append(dfs[t][lc] == acc[oc])
-                used.add(i)
-        if not conds:
-            raise ValueError(f"order {order} joins {t} with no bound edge (cartesian)")
-        cond = conds[0]
-        for c in conds[1:]:
-            cond = cond & c
-        acc = acc.join(dfs[t], cond)
-        bound.add(t)
-        if progress is not None:
-            acc = progress.put(
-                frozenset(bound), acc, terminal=len(bound) == len(order))
-    return acc
-
-
 @dataclass
 class EpisodeStats:
     order: tuple[str, ...]
@@ -353,69 +309,3 @@ class AdaptiveJoinResult:
     #: (the ProgressTracker analogue, see PrefixProgress)
     prefix_hits: int = 0
 
-
-def adaptive_join(
-    dfs: dict[str, DataFrame],
-    edges: list[JoinEdge],
-    fact: str | None = None,
-    episodes: int = 8,
-    sample_fraction: float = 0.05,
-    max_orders: int = 16,
-    seed: int = 42,
-    episode_budget_s: float | None = None,
-    share_progress: bool = True,
-) -> AdaptiveJoinResult:
-    """Bandit-chosen join order, learned from sampled execution.
-
-    Each episode samples the designated fact table (largest input if not
-    given), runs one candidate order's join chain on the sample, and rewards
-    the bandit with -log(elapsed) normalized — the analogue of the reference's
-    per-episode progress reward (OldJoin.java:92-106). With
-    ``episode_budget_s`` set, an episode exceeding the wall-clock budget is
-    CANCELLED and penalized (see :func:`budgeted_count` — the reference's
-    500-step episode budget in Spark idiom); the winner always executes in
-    full, unbudgeted. With ``share_progress`` (default), partial-join
-    results are persisted per bound-table set and REUSED across episodes —
-    the ProgressTracker analogue (:class:`PrefixProgress`): repeated or
-    prefix-sharing orders resume instead of redoing work, exploration-only.
-    Results are identical for every order (inner joins commute); only the
-    physical plan differs.
-    """
-    tables = list(dfs)
-    fact = fact or tables[0]
-    cands = connected_orders(tables, edges, max_orders=max_orders)
-    # prefer orders that start at the fact table (probe-side last heuristic
-    # falls out of broadcasting the dims)
-    cands.sort(key=lambda o: (o[0] != fact, o))
-    if not cands:
-        raise ValueError("no connected join order exists (query graph is disconnected)")
-    if len(cands) == 1:
-        return AdaptiveJoinResult(build_join_chain(dfs, cands[0], edges), cands[0])
-
-    sampled = dict(dfs)
-    sampled[fact] = dfs[fact].sample(fraction=sample_fraction, seed=seed)
-    bandit = UCB1(len(cands))
-    stats: list[EpisodeStats] = []
-    progress = PrefixProgress() if share_progress else None
-    try:
-        for _ in range(episodes):
-            arm = bandit.select()
-            if progress is not None:
-                progress.record_only = bandit.n[arm] == 0
-            rows, dt = budgeted_count(
-                build_join_chain(sampled, cands[arm], edges, progress),
-                episode_budget_s,
-            )
-            timed_out = rows is None
-            reward = -math.log(max(dt, 1e-4) * (_TIMEOUT_PENALTY if timed_out else 1.0))
-            bandit.update(arm, reward)
-            stats.append(
-                EpisodeStats(cands[arm], dt, -1 if timed_out else rows, reward, timed_out)
-            )
-    finally:
-        hits = progress.hits if progress is not None else 0
-        if progress is not None:
-            progress.clear()
-    best = cands[bandit.best()]
-    # the winner executes in full on a FRESH plan — never from episode blocks
-    return AdaptiveJoinResult(build_join_chain(dfs, best, edges), best, stats, hits)

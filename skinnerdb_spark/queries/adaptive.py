@@ -1,11 +1,14 @@
 """Adaptive-join-ordered query — the reference's headline feature exercised
 inside the correctness gate.
 
-The bandit (plans/joinorder.py) learns a left-deep order from sampled
-episodes, then the winning order executes as a plain join chain. Inner joins
-commute, so the result must be — and is, oracle-verified — identical to
-Catalyst's own choice; only the physical plan differs. bench=False: this entry
-demonstrates the planner, the equivalent static plan is timed as tpch_q05.
+The four-table join goes through the same path as ``Engine.adaptive_sql``
+(plans/graph.py ``adaptive_reorder``): the bandit learns a left-deep order
+from sampled episodes, then the winning order executes as a plain join chain.
+``use_cache=False``: this entry reads and writes no learned-order cache, so
+every run learns afresh. Inner joins commute, so the result must be — and
+is, oracle-verified — identical to Catalyst's own choice; only the physical
+plan differs. bench=False: this entry demonstrates the planner, the
+equivalent static plan is timed as tpch_q05.
 """
 
 from __future__ import annotations
@@ -14,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skinnerdb_spark.functions.exact import DS, dsum
-from skinnerdb_spark.plans.joinorder import JoinEdge, adaptive_join
+from skinnerdb_spark.plans.graph import adaptive_reorder
 from skinnerdb_spark.queries.util import read_table, ts
 from skinnerdb_spark.registry import register
 
@@ -33,22 +36,18 @@ from skinnerdb_spark.registry import register
     tags=("adaptive", "join"),
 )
 def adaptive_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dfs = {
-        "lineitem": read_table(spark, sf_dir, "lineitem"),
-        "orders": read_table(spark, sf_dir, "orders").filter(
-            F.col("o_orderdate") >= ts("1996-01-01")
-        ),
-        "supplier": read_table(spark, sf_dir, "supplier"),
-        "nation": read_table(spark, sf_dir, "nation"),
-    }
-    edges = [
-        JoinEdge("lineitem", "l_orderkey", "orders", "o_orderkey"),
-        JoinEdge("lineitem", "l_suppkey", "supplier", "s_suppkey"),
-        JoinEdge("supplier", "s_nationkey", "nation", "n_nationkey"),
-    ]
-    res = adaptive_join(
-        dfs, edges, fact="lineitem", episodes=4, sample_fraction=0.1, max_orders=8
+    lineitem = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderdate") >= ts("1996-01-01")
     )
+    supplier = read_table(spark, sf_dir, "supplier")
+    nation = read_table(spark, sf_dir, "nation")
+    joined = (
+        lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(supplier, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
+    )
+    res = adaptive_reorder(joined, episodes=4, max_orders=8, use_cache=False)
     return res.df.groupBy("n_name").agg(
         F.count(F.lit(1)).alias("n_rows"),
         dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),

@@ -77,52 +77,6 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
     )
-    # Catalyst-injection shim (plans/catalyst_rule.py): the thin JVM rule
-    # class must be on the DRIVER classpath at JVM launch — only effective
-    # for the first session of the process; later getOrCreate()s reuse the
-    # running JVM and install_learned_order_rule() simply reports
-    # unavailable (clean fallback to Engine.adaptive_sql).
-    _rule_jar = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "skinner-rule.jar")
-    extra_conf = dict(extra_conf or {})
-    if os.path.isfile(_rule_jar):
-        # APPEND to any pre-existing classpath (env/spark-defaults or a
-        # user-supplied extra_conf value) instead of clobbering either way
-        # (ADVICE r6): dropping the ambient path breaks user deps; dropping
-        # the jar silently disables the rule.
-        # ambient sources, in increasing precedence: spark-defaults.conf
-        # (what Spark itself would read — the env var SPARK_DRIVER_EXTRA
-        # _CLASSPATH is NOT a Spark conf name, ADVICE r7), then the env
-        # var (kept for back-compat), then the caller's extra_conf
-        ambient_parts: list[str] = []
-        try:
-            from pyspark import SparkConf
-
-            ambient_parts.append(SparkConf().get("spark.driver.extraClassPath", "") or "")
-        except Exception:
-            pass
-        conf_dir = os.environ.get("SPARK_CONF_DIR") or (
-            os.path.join(os.environ["SPARK_HOME"], "conf")
-            if "SPARK_HOME" in os.environ
-            else ""
-        )
-        defaults_file = os.path.join(conf_dir, "spark-defaults.conf") if conf_dir else ""
-        if defaults_file and os.path.isfile(defaults_file):
-            try:
-                with open(defaults_file) as fh:
-                    for line in fh:
-                        parts = line.strip().split(None, 1)
-                        if len(parts) == 2 and parts[0] == "spark.driver.extraClassPath":
-                            ambient_parts.append(parts[1].strip())
-            except OSError:
-                pass
-        ambient_parts.append(os.environ.get("SPARK_DRIVER_EXTRA_CLASSPATH", ""))
-        ambient = os.pathsep.join(p for p in ambient_parts if p)
-        user = extra_conf.pop("spark.driver.extraClassPath", "")
-        seen: list[str] = []
-        for part in (*user.split(os.pathsep), *ambient.split(os.pathsep), _rule_jar):
-            if part and part not in seen:
-                seen.append(part)
-        b = b.config("spark.driver.extraClassPath", os.pathsep.join(seen))
     for k, v in (extra_conf or {}).items():  # user conf wins over defaults
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -13,13 +13,12 @@ from pyspark.sql import functions as F
 from skinnerdb_spark.catalog import read_table
 from skinnerdb_spark.engine import Engine
 from skinnerdb_spark.operators import multimodal
-from skinnerdb_spark.plans.joinorder import (
-    UCB1,
-    JoinEdge,
-    adaptive_join,
-    build_join_chain,
-    connected_orders,
+from skinnerdb_spark.plans.graph import (
+    adaptive_reorder,
+    build_graph_chain,
+    extract_query_graph,
 )
+from skinnerdb_spark.plans.joinorder import UCB1, JoinEdge, connected_orders
 from skinnerdb_spark.sources.csv import load_csv
 from skinnerdb_spark.streaming.windows import (
     run_stream_once,
@@ -32,7 +31,7 @@ from skinnerdb_spark.streaming.windows import (
 
 
 # --------------------------------------------------------------------------
-# plans/joinorder
+# plans/joinorder primitives + the plans/graph learn/apply path
 # --------------------------------------------------------------------------
 EDGES = [
     JoinEdge("lineitem", "l_orderkey", "orders", "o_orderkey"),
@@ -63,33 +62,28 @@ def test_ucb1_prefers_better_arm():
     assert b.best() == 1
 
 
-def test_adaptive_join_matches_catalyst(spark, sf_dir):
-    dfs = {
-        "lineitem": read_table(spark, sf_dir, "lineitem"),
-        "orders": read_table(spark, sf_dir, "orders"),
-        "customer": read_table(spark, sf_dir, "customer"),
-        "supplier": read_table(spark, sf_dir, "supplier"),
-    }
-    res = adaptive_join(dfs, EDGES, fact="lineitem", episodes=4, sample_fraction=0.2)
-    got = res.df.count()
-    expect = (
-        dfs["lineitem"]
-        .join(dfs["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(dfs["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(dfs["supplier"], F.col("l_suppkey") == F.col("s_suppkey"))
-        .count()
+def _four_way_join(spark, sf_dir):
+    """The EDGES graph as a DataFrame join chain in Catalyst's hands."""
+    return (
+        read_table(spark, sf_dir, "lineitem")
+        .join(read_table(spark, sf_dir, "orders"), F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(read_table(spark, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        .join(read_table(spark, sf_dir, "supplier"), F.col("l_suppkey") == F.col("s_suppkey"))
     )
-    assert got == expect, "adaptive order must not change inner-join semantics"
-    assert res.best_order[0] == "lineitem" or len(res.episodes) > 0
 
 
-def test_build_join_chain_rejects_cartesian(spark, sf_dir):
-    dfs = {
-        "customer": read_table(spark, sf_dir, "customer"),
-        "supplier": read_table(spark, sf_dir, "supplier"),
-    }
-    with pytest.raises(ValueError, match="cartesian"):
-        build_join_chain(dfs, ("customer", "supplier"), EDGES)
+def test_adaptive_join_matches_catalyst(spark, sf_dir):
+    df = _four_way_join(spark, sf_dir)
+    res = adaptive_reorder(df, episodes=4, use_cache=False)
+    assert sorted(res.best_order) == ["customer", "lineitem", "orders", "supplier"]
+    assert res.episodes, "uncached 4-way join must learn its order"
+    assert res.df.count() == df.count(), "adaptive order must not change inner-join semantics"
+
+
+def test_build_graph_chain_rejects_cartesian(spark, sf_dir):
+    graph = extract_query_graph(_four_way_join(spark, sf_dir))
+    with pytest.raises(ValueError, match="no bound edge"):
+        build_graph_chain(graph, ("customer", "supplier", "lineitem", "orders"))
 
 
 # --------------------------------------------------------------------------

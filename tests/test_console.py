@@ -42,6 +42,9 @@ def test_adaptive_toggle(console):
     )
     assert "[adaptive order:" in out
     assert "off" in console.handle("adaptive off")
+    # anything but on/off is a usage error, not a silent toggle
+    assert console.handle("adaptive rule") == "usage: adaptive on|off"
+    assert console.adaptive is False
 
 
 def test_index_and_errors_survive(console):
@@ -229,18 +232,6 @@ def test_analyze_dot_renders_executed_profile(console):
     assert out.startswith("digraph plan {")
     assert "HashAggregate" in out and "->" in out
     assert "rows=25" in out  # the scan's executed output-row metric
-
-
-def test_adaptive_rule_toggle(console):
-    """`adaptive rule` installs the Catalyst learned-order injection on the
-    session (session.py puts the shim jar on the classpath); `adaptive rule
-    off` removes it. Injection semantics are covered in
-    tests/test_catalyst_rule.py."""
-    out = console.handle("adaptive rule")
-    assert "rule on" in out
-    # plain SQL still works with the rule installed
-    assert "5" in console.handle("SELECT COUNT(*) AS n FROM region")
-    assert "off" in console.handle("adaptive rule off")
 
 
 def test_vacuum_repoints_cached_views(console, spark, sf_dir):

@@ -18,7 +18,6 @@ from skinnerdb_spark.plans.graph import (
     adaptive_reorder,
     extract_query_graph,
 )
-from skinnerdb_spark.plans.joinorder import JoinEdge
 from skinnerdb_spark.queries.util import read_table, ts
 
 
@@ -28,8 +27,8 @@ def views(spark, sf_dir):
 
 
 def test_extracted_edges_match_handwritten_star(spark, sf_dir):
-    """The graph extracted from adaptive_star_join's query equals the
-    hand-built JoinEdge list in queries/adaptive.py."""
+    """The graph extracted from adaptive_star_join's join equals the edge
+    list a human would write by hand."""
     dfs = {
         "lineitem": read_table(spark, sf_dir, "lineitem"),
         "orders": read_table(spark, sf_dir, "orders").filter(
@@ -215,11 +214,10 @@ def test_order_cache_not_shared_across_warehouses(spark, sf_dir):
 
 def test_cross_warehouse_order_transfer(spark, sf_dir, monkeypatch):
     """An order learned on one warehouse warm-starts the SAME query shape on
-    a different warehouse (scope-free transfer tier). Default contract (r7):
-    the transferred order enters the episode duel as the INCUMBENT arm and
-    the validated winner is written under the new scope's signatures;
-    SKINNER_ORDER_TRANSFER=trust restores the r6 zero-episode behavior
-    (never written back), and =0 restores cold learning."""
+    a different warehouse (scope-free transfer tier): the transferred order
+    enters the episode duel as the INCUMBENT arm and the validated winner is
+    written under the new scope's signatures. Above the exploit threshold
+    the duel is skipped and the order is served as a warm start only."""
     from skinnerdb_spark.plans import graph as G
 
     monkeypatch.setenv("SKINNER_ORDER_CACHE_PERSIST", "0")
@@ -242,35 +240,19 @@ def test_cross_warehouse_order_transfer(spark, sf_dir, monkeypatch):
             G._ORDER_CACHE.pop(g2.shape_sig, None)
             return g2
 
-        # trust mode: zero episodes, never written under the new scope
-        monkeypatch.setenv("SKINNER_ORDER_TRANSFER", "trust")
-        g2 = _pop_scope_sigs()
-        r2 = adaptive_reorder(spark.sql(q), episodes=2)
-        assert getattr(r2, "reason", None) == "cached-transfer"
-        assert r2.best_order == r1.best_order
-        assert not r2.episodes
-        assert g2.signature not in G._ORDER_CACHE  # warm start, not authority
-
         # default (validated): episodes run with the transferred order as
         # the first arm played, and the winner IS cached under this scope
-        monkeypatch.delenv("SKINNER_ORDER_TRANSFER", raising=False)
         g2 = _pop_scope_sigs()
         r4 = adaptive_reorder(spark.sql(q), episodes=2)
         assert r4.episodes  # duel happened
         assert r4.episodes[0].order == r1.best_order  # incumbent played first
         assert g2.signature in G._ORDER_CACHE  # validated winner cached here
 
-        monkeypatch.setenv("SKINNER_ORDER_TRANSFER", "0")
-        _pop_scope_sigs()
-        r3 = adaptive_reorder(spark.sql(q), episodes=2)
-        assert r3.episodes  # transfer disabled -> cold learning again
-
         # exploit-only fast path at scale (VERDICT r7 item 3): with the
         # size threshold forced below this warehouse, a previously-duelled
         # transferred order is exploited with ZERO episodes — and stays a
         # warm start, never authority
-        monkeypatch.delenv("SKINNER_ORDER_TRANSFER", raising=False)
-        monkeypatch.setenv("SKINNER_TRANSFER_EXPLOIT_ROWS", "1")
+        monkeypatch.setattr(G, "_TRANSFER_EXPLOIT_ROWS", 1)
         g2 = _pop_scope_sigs()
         before = G.adaptive_counters()
         r5 = adaptive_reorder(spark.sql(q), episodes=2)
@@ -281,13 +263,6 @@ def test_cross_warehouse_order_transfer(spark, sf_dir, monkeypatch):
         assert after["exploit_hits"] == before["exploit_hits"] + 1
         assert after["episodes"] == before["episodes"]
         assert g2.signature not in G._ORDER_CACHE
-
-        # threshold disabled (=0): the duel runs again even with a
-        # transfer entry present
-        monkeypatch.setenv("SKINNER_TRANSFER_EXPLOIT_ROWS", "0")
-        _pop_scope_sigs()
-        r6 = adaptive_reorder(spark.sql(q), episodes=2)
-        assert r6.episodes
     finally:
         register_views(spark, sf_dir)
 
@@ -551,62 +526,38 @@ def test_prefix_progress_resumes_partial_joins(spark):
     join keyed by its bound-table SET and later episodes resume from the
     persisted blocks. Set keying shares strictly more than the reference's
     order-prefix keying: order (f,a,b) seeds order (f,b,a) at the full set."""
-    from skinnerdb_spark.plans.joinorder import (
-        JoinEdge,
-        PrefixProgress,
-        build_join_chain,
-    )
+    from skinnerdb_spark.plans.graph import build_graph_chain
+    from skinnerdb_spark.plans.joinorder import PrefixProgress
 
     f = spark.createDataFrame(
         [(i, i % 5, i % 7) for i in range(60)], "fid bigint, ja bigint, jb bigint")
     da = spark.createDataFrame([(i, i * 10) for i in range(5)], "ja2 bigint, av bigint")
     db = spark.createDataFrame([(i, i * 100) for i in range(7)], "jb2 bigint, bv bigint")
-    dfs = {"f": f, "a": da, "b": db}
-    edges = [JoinEdge("f", "ja", "a", "ja2"), JoinEdge("f", "jb", "b", "jb2")]
+    graph = extract_query_graph(
+        f.alias("f")
+        .join(da.alias("a"), F.col("ja") == F.col("ja2"))
+        .join(db.alias("b"), F.col("jb") == F.col("jb2"))
+    )
+    assert sorted(graph.names) == ["a", "b", "f"]
 
-    want = sorted(map(tuple, build_join_chain(dfs, ("f", "a", "b"), edges).collect()))
+    want = sorted(map(tuple, build_graph_chain(graph, ("f", "a", "b")).collect()))
 
     sc = spark.sparkContext
     persisted_before = sc._jsc.getPersistentRDDs().size()
     prog = PrefixProgress()
-    c1 = build_join_chain(dfs, ("f", "a", "b"), edges, prog)
+    c1 = build_graph_chain(graph, ("f", "a", "b"), progress=prog)
     assert sorted(map(tuple, c1.collect())) == want
     assert prog.hits == 0  # first episode: nothing to resume
     # different order, same final set: the 3-table frame is resumed
-    c2 = build_join_chain(dfs, ("f", "b", "a"), edges, prog)
+    c2 = build_graph_chain(graph, ("f", "b", "a"), progress=prog)
     assert prog.hits == 1
-    assert sorted(map(tuple, c2.collect())) == [tuple(r) for r in want]
+    assert sorted(map(tuple, c2.collect())) == want
     # identical order: resumes at the terminal set (mid-chain prefixes are
     # deliberately not persisted — measured net loss, see PrefixProgress)
-    build_join_chain(dfs, ("f", "a", "b"), edges, prog)
+    build_graph_chain(graph, ("f", "a", "b"), progress=prog)
     assert prog.hits == 2
     prog.clear()
     assert sc._jsc.getPersistentRDDs().size() == persisted_before
-
-
-def test_adaptive_join_shares_progress_across_episodes(spark):
-    from skinnerdb_spark.plans.joinorder import JoinEdge, adaptive_join
-
-    f = spark.createDataFrame(
-        [(i, i % 4, i % 6) for i in range(80)], "fid bigint, ja bigint, jb bigint")
-    da = spark.createDataFrame([(i, i) for i in range(4)], "ja2 bigint, av bigint")
-    db = spark.createDataFrame([(i, i) for i in range(6)], "jb2 bigint, bv bigint")
-    dfs = {"f": f, "a": da, "b": db}
-    edges = [JoinEdge("f", "ja", "a", "ja2"), JoinEdge("f", "jb", "b", "jb2")]
-
-    shared = adaptive_join(dfs, edges, fact="f", episodes=6, sample_fraction=1.0)
-    assert shared.prefix_hits > 0, "repeated/overlapping orders must resume"
-    unshared = adaptive_join(
-        dfs, edges, fact="f", episodes=6, sample_fraction=1.0, share_progress=False)
-    assert unshared.prefix_hits == 0
-    # winners may differ (wall-clock rewards), so column order may differ;
-    # compare as sorted name->value rows
-    def rows(df):
-        return sorted(tuple(sorted(r.asDict().items())) for r in df.collect())
-
-    assert rows(shared.df) == rows(unshared.df)
-    # episode blocks are unpersisted; the winner plan is fresh (no InMemory)
-    assert "InMemoryTableScan" not in shared.df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_adaptive_reorder_episodes_share_progress(spark):
@@ -663,3 +614,58 @@ def test_episode_loop_stops_at_first_progress_hit(spark, monkeypatch):
     if res.prefix_hits:
         cold = res.episodes[:-1]
         assert len({e.order for e in cold}) == len(cold)
+
+
+def test_adaptive_star_join_learns_uncached_and_matches_catalyst(
+        spark, sf_dir, monkeypatch):
+    """The registry's adaptive entry goes through adaptive_reorder like every
+    other adaptive path: it runs episodes, never reads or writes the learned
+    order cache, honours SKINNER_ADAPTIVE_DISABLE, and returns Catalyst's
+    rows."""
+    from skinnerdb_spark.plans import graph as G
+    from skinnerdb_spark.queries.adaptive import adaptive_star_join
+
+    def no_cache(*_):
+        raise AssertionError("adaptive_star_join must not touch the order cache")
+
+    monkeypatch.setattr(G, "_cache_get", no_cache)
+    monkeypatch.setattr(G, "_cache_put", no_cache)
+    cache_before = dict(G._ORDER_CACHE)
+    episodes_before = G.adaptive_counters()["episodes"]
+    got = sorted(map(tuple, adaptive_star_join(spark, sf_dir).collect()))
+    assert G.adaptive_counters()["episodes"] > episodes_before
+    assert G._ORDER_CACHE == cache_before
+
+    monkeypatch.setenv("SKINNER_ADAPTIVE_DISABLE", "1")
+    episodes_before = G.adaptive_counters()["episodes"]
+    want = sorted(map(tuple, adaptive_star_join(spark, sf_dir).collect()))
+    assert G.adaptive_counters()["episodes"] == episodes_before
+    assert got == want and got
+
+
+def test_jvm_class_cache_never_serves_a_dead_view():
+    """ADVICE r12: class handles keyed by id(spark._jvm) leak across views —
+    once a view is freed, CPython may hand its id to the next one, which
+    then receives the dead view's handles. The cache must serve every view
+    its OWN handles."""
+    import gc
+    from types import SimpleNamespace
+
+    from skinnerdb_spark.plans import graph as G
+
+    class View:
+        def __init__(self):
+            self.handle = object()  # holds no reference back to the view
+
+        def __getattr__(self, name):
+            return self.__dict__["handle"]
+
+    view = View()
+    dead_id = id(view)
+    assert G._jcls(SimpleNamespace(_jvm=view), "Cls") is view.handle
+    del view
+    gc.collect()
+    # the freed slot is usually reused at once; take the view that got it
+    fresh = [View() for _ in range(1000)]
+    view = next((v for v in fresh if id(v) == dead_id), fresh[-1])
+    assert G._jcls(SimpleNamespace(_jvm=view), "Cls") is view.handle
